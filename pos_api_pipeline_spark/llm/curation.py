@@ -16,8 +16,12 @@ they are the corpus-side surface the build brief mandates next to it.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pos_api_pipeline_spark.llm.text import spread_small_scan, tokens
 
 # ---------------------------------------------------------------------------
 # Repetition statistics (the Gopher repetition filters, per document)
@@ -783,122 +787,79 @@ def shared_shingle_stats(
     )
 
 
-def repeated_substring_spans(
-    df: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-    strategy: str = "window",
-) -> DataFrame:
-    """Cross-document repeated-substring detection at the k-token
-    grain — the fixed-length form of Lee et al. 2022's exact
-    substring dedup ("Deduplicating Training Data Makes Language
-    Models Better"): every k-token window whose hash occurs in ≥
-    ``min_docs`` distinct documents is flagged, and flagged windows
-    are merged into MAXIMAL spans per document (gaps-and-islands), so
-    a 200-token license block shared by thousands of pages comes back
-    as one span per page, not 193 window hits.
-
-    Shape (``strategy="window"``, default): one positional gram
-    explode (linear in corpus tokens), then document frequency as
-    window algebra over the hash partition — dense_rank by id, max
-    over the partition — so the gram tree is evaluated ONCE and the
-    corpus makes exactly one shuffle (on the 60-bit gram hash) before
-    the per-doc island merge. The join twin (``strategy="join"``:
-    groupBy hash → semi join back) evaluates the tokenize+hash tree
-    twice because lambda-bearing plans defeat exchange reuse —
-    measured 1.9× slower at sf0.1 — but remains available because an
-    AQE skew split can break up a pathologically hot JOIN partition,
-    while a WINDOW partition (one gram in millions of docs) must
-    spill through a single task. The only quadratic-looking step —
-    span growth — is arithmetic inside the per-doc window, never a
-    self-join. A suffix array finds variable-length maximal repeats;
-    at cluster scale the fixed-k windowed form is the standard
-    approximation (tune k to the minimum span you care about).
-
-    Output: (id, span_start, span_end, n_grams, span_tokens) with
-    token positions 0-based inclusive. Both strategies are
-    output-identical (equality-checked at sf0.1).
-    """
-    from pyspark.sql import Window
-
-    if strategy not in ("window", "join"):
-        raise ValueError(
-            f"strategy must be 'window' or 'join', got {strategy!r}"
-        )
-    toked, ex = _positional_grams(df, k, text_col, id_col)
-    if strategy == "window":
-        # Document frequency without a second pass: dense_rank by id
-        # inside the hash partition, then its max over the partition
-        # = countDistinct(id) — one sort, two Window ops, same
-        # exchange. The partition buffer spills (not OOMs) on hot
-        # grams; see the docstring for when to prefer "join".
-        wh = Window.partitionBy("h").orderBy("id")
-        flagged = (
-            ex.withColumn("_dr", F.dense_rank().over(wh))
-            .withColumn("_nd", F.max("_dr").over(Window.partitionBy("h")))
-            .filter(F.col("_nd") >= min_docs)
-            .select("id", "pos")
-        )
-    else:
-        hot = (
-            ex.groupBy("h")
-            .agg(F.countDistinct("id").alias("nd"))
-            .filter(F.col("nd") >= min_docs)
-            .select("h")
-        )
-        flagged = ex.join(hot, "h", "left_semi")
-    return _gram_islands_to_spans(flagged, toked, k, id_col)
+def _span_tokens(text_col: str) -> Column:
+    """The span family's tokenizer: lowercased whitespace tokens,
+    empties dropped — shared by the gram stream, the span text and
+    the excision, so positions agree across all three."""
+    return tokens(F.lower(F.col(text_col)))
 
 
-def _positional_grams(
+def _gram_stream(
     df: DataFrame, k: int, text_col: str, id_col: str
-):
-    """(toked, gram_rows) for the span family: ``toked`` carries the
-    materialized token array once per doc; ``gram_rows`` is the
-    exploded (id, pos, h) stream of positional k-gram portable
-    hashes. The gram rows carry ONLY (id, pos, h) through whatever
-    shuffle/probe follows — never the token array (a big document's
-    array would otherwise ride on every one of its flagged gram
-    rows); the (id, toks) frame joins back exactly once per SPAN
-    after aggregation, when only a handful of rows remain."""
-    from pos_api_pipeline_spark.llm.dedup import portable_hash64
+) -> DataFrame:
+    """(id, pos, h1, h2): one row per positional k-token gram, its
+    identity a 128-bit pair of independent xxhash64 streams (a false
+    merge needs a simultaneous 2⁻¹²⁸-scale collision in both). The
+    rows carry no tokens, so whatever shuffle follows moves four
+    longs per gram.
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-    tc = F.col("_toks")
-    n_grams_in_doc = F.size(tc) - (k - 1)
-    grams = F.when(
-        n_grams_in_doc >= 1,
+    localCheckpointed lazily (materialized inside the first action):
+    the stream typically feeds both a gram-identity aggregate and the
+    sieve's stream side, and the lambda-bearing tokenize tree never
+    canonicalizes, so without the cut the corpus would be scanned and
+    re-hashed per consumer."""
+    toked = spread_small_scan(
+        df.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
+    ).select("id", _span_tokens(text_col).alias("_toks"))
+    # sequence(1, 0) runs BACKWARDS — guard short docs to an empty
+    # gram array; explode_outer + null filter keeps the tokenize tree
+    # out of an inferred scan filter.
+    gram_strs = F.when(
+        F.size("_toks") >= k,
         F.transform(
-            F.sequence(F.lit(1), n_grams_in_doc),
-            lambda i: F.struct(
-                (i - 1).cast("long").alias("pos"),
-                portable_hash64(F.array_join(F.slice(tc, i, k), " ")).alias(
-                    "h"
-                ),
-            ),
+            F.sequence(F.lit(1), F.size("_toks") - F.lit(k - 1)),
+            lambda i: F.array_join(F.slice("_toks", i, k), " "),
         ),
-    ).otherwise(F.array().cast("array<struct<pos:long,h:long>>"))
-    toked = df.select(
-        F.col(id_col).alias("id"), F.col(text_col)
-    ).withColumn("_toks", toks)
-    ex = (
-        toked.select("id", F.explode_outer(grams).alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select("id", F.col("g.pos").alias("pos"), F.col("g.h").alias("h"))
+    ).otherwise(F.array().cast("array<string>"))
+    return (
+        toked.select("id", F.posexplode_outer(gram_strs).alias("pos", "_g"))
+        .filter(F.col("_g").isNotNull())
+        .select(
+            "id",
+            F.col("pos").cast("long").alias("pos"),
+            F.xxhash64("_g").alias("h1"),
+            F.xxhash64(F.lit(7), "_g").alias("h2"),
+        )
+        .localCheckpoint(eager=False)
     )
-    return toked, ex
 
 
-def _gram_islands_to_spans(flagged, toked, k: int, id_col: str):
-    """Gaps-and-islands merge of flagged gram positions into maximal
-    per-document spans, with the span text sliced from the token
-    array joined back once per span."""
+def _gram_spans(
+    df: DataFrame,
+    k: int,
+    text_col: str,
+    id_col: str,
+    kept: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The one gram-span engine behind ``repeated_substring_spans``,
+    ``contaminated_spans`` and ``suffix.repeated_spans_exact``: every
+    positional k-gram whose identity is in ``kept(grams)`` (an
+    (h1, h2) frame built from the gram stream or from elsewhere) is
+    flagged by a semi-join sieve, and flagged grams are merged into
+    MAXIMAL per-document spans by one gaps-and-islands window — a
+    flagged gram starting more than k tokens after the previous one
+    opens a new island, so overlapping or token-adjacent grams fuse.
+
+    A sieve rather than a window over the gram partition: a window
+    puts every occurrence of one boilerplate gram in a single task,
+    while the semi-join's stream side is AQE-skew-splittable.
+
+    Output: (id_col, span_start, span_end, n_grams), token positions
+    0-based inclusive; the id column keeps the input's type."""
     from pyspark.sql import Window
 
+    grams = _gram_stream(df, k, text_col, id_col)
+    flagged = grams.join(kept(grams), ["h1", "h2"], "left_semi")
     w = Window.partitionBy("id").orderBy("pos")
     new_island = F.when(
         F.col("pos") - F.lag("pos").over(w) <= k, F.lit(0)
@@ -907,25 +868,76 @@ def _gram_islands_to_spans(flagged, toked, k: int, id_col: str):
         "island",
         F.sum("_ni").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    spans = islands.groupBy("id", "island").agg(
+    return islands.groupBy("id", "island").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + F.lit(k - 1)).alias("span_end"),
         F.count(F.lit(1)).alias("n_grams"),
+    ).select(
+        F.col("id").alias(id_col), "span_start", "span_end", "n_grams"
     )
-    return spans.join(toked.select("id", "_toks"), "id").select(
-        F.col("id").alias(id_col),
+
+
+def _with_span_text(
+    spans: DataFrame, docs: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """Attach ``span_tokens``: the span's tokens re-joined with single
+    spaces. The text joins back once per SPAN, after aggregation, and
+    is tokenized after the join — only documents with a span pay for
+    it, and the gram stream never carries the token array."""
+    joined = spans.join(
+        docs.select(F.col(id_col), F.col(text_col).alias("_text")), id_col
+    )
+    return joined.select(
+        id_col,
         "span_start",
         "span_end",
         "n_grams",
         F.array_join(
             F.slice(
-                F.col("_toks"),
+                _span_tokens("_text"),
                 F.col("span_start") + 1,
                 F.col("span_end") - F.col("span_start") + 1,
             ),
             " ",
         ).alias("span_tokens"),
     )
+
+
+def repeated_substring_spans(
+    df: DataFrame,
+    k: int = 8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_docs: int = 2,
+) -> DataFrame:
+    """Cross-document repeated-substring detection at the k-token
+    grain — the fixed-length form of Lee et al. 2022's exact
+    substring dedup ("Deduplicating Training Data Makes Language
+    Models Better"): every k-token window occurring in ≥ ``min_docs``
+    distinct documents is flagged (a repeat inside one document
+    counts once), and flagged windows are merged into MAXIMAL spans
+    per document, so a 200-token license block shared by thousands
+    of pages comes back as one span per page, not 193 window hits.
+    ``suffix.repeated_spans_exact`` is the every-occurrence form.
+
+    Shape: ``_gram_spans`` with a distinct-document count per gram
+    identity as the kept set — linear in corpus tokens, and a hot
+    gram's partial counts combine map-side before its one exchange.
+
+    Output: (id_col, span_start, span_end, n_grams, span_tokens) with
+    token positions 0-based inclusive.
+    """
+
+    def shared(grams: DataFrame) -> DataFrame:
+        return (
+            grams.groupBy("h1", "h2")
+            .agg(F.countDistinct("id").alias("_nd"))
+            .filter(F.col("_nd") >= min_docs)
+            .select("h1", "h2")
+        )
+
+    spans = _gram_spans(df, k, text_col, id_col, shared)
+    return _with_span_text(spans, df, text_col, id_col)
 
 
 def contaminated_spans(
@@ -944,41 +956,33 @@ def contaminated_spans(
     ``contamination`` answers "how contaminated is this doc";
     this answers "which exact ranges must be cut".
 
-    Plan: positional k-gram hashes of the corpus (one explode, the
-    shared ``_positional_grams`` shape), probed against the
-    benchmark's distinct gram-hash set — eval sets are MBs against
-    TBs, so the probe side is an explicit **broadcast** and the
-    corpus never shuffles on the hash at all; the only wide step is
-    the per-document island window, partitioned on the doc id.
-    Hashes are portable (md5-prefix), so the DuckDB oracle replays
-    the probe and the island merge bit-for-bit.
+    Plan: ``_gram_spans`` with the benchmark's distinct gram
+    identities — hashed by the same gram stream — as the kept set.
+    Eval sets are MBs against TBs, so that set is an explicit
+    **broadcast** and the corpus never shuffles on the gram identity;
+    the only wide step is the per-document island window.
 
     Output: (id_col, span_start, span_end, n_grams, span_tokens),
     token positions 0-based inclusive.
     """
-    from pos_api_pipeline_spark.llm.dedup import with_shingles
-
     bench_text = bench_text_col or text_col
     bench_grams = (
-        with_shingles(
-            benchmark.select(F.col(bench_text).alias("text")).withColumn(
-                "_bid", F.monotonically_increasing_id()
+        _gram_stream(
+            benchmark.select(
+                F.monotonically_increasing_id().alias("_bid"),
+                F.col(bench_text).alias("_text"),
             ),
-            text_col="text",
-            id_col="_bid",
-            n=k,
-            hashed=True,
-            portable=True,
+            k,
+            "_text",
+            "_bid",
         )
-        .select(F.explode_outer("shingles").alias("h"))
-        .filter(F.col("h").isNotNull())
+        .select("h1", "h2")
         .distinct()
     )
-    toked, ex = _positional_grams(docs, k, text_col, id_col)
-    flagged = ex.join(F.broadcast(bench_grams), "h", "left_semi").select(
-        "id", "pos"
+    spans = _gram_spans(
+        docs, k, text_col, id_col, lambda _grams: F.broadcast(bench_grams)
     )
-    return _gram_islands_to_spans(flagged, toked, k, id_col)
+    return _with_span_text(spans, docs, text_col, id_col)
 
 
 def remove_contaminated_spans(
@@ -1042,10 +1046,7 @@ def excise_token_spans(
     # of NULL is NULL — coalescing the token array to empty keeps the
     # "uniformly normalized" contract (cleaned='', n_tokens=0).
     toks = F.coalesce(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-        ),
-        F.array().cast("array<string>"),
+        _span_tokens(text_col), F.array().cast("array<string>")
     )
     toked = docs.select(
         F.col(id_col).alias("id"), F.col(text_col)

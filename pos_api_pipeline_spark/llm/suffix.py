@@ -1,283 +1,34 @@
-"""Distributed suffix array via prefix doubling + exact repeated-
-substring spans (Lee et al. 2022, "Deduplicating Training Data Makes
-Language Models Better" — the ExactSubstr dedup, re-expressed for
-Spark's execution model instead of a single-node suffix automaton).
+"""Exact repeated-substring spans (Lee et al. 2022, "Deduplicating
+Training Data Makes Language Models Better" — the ExactSubstr dedup,
+re-expressed for Spark's execution model instead of a single-node
+suffix array).
 
-Reference parity: supersedes the fixed-k positional-gram
-approximation in ``llm/curation.py:repeated_substring_spans`` with
-the variable-length exact form: every maximal token span covered by
-some substring of length ≥ ``min_len`` occurring ≥ 2 times anywhere
-in the corpus (including twice inside ONE document — the k-gram
-form's ``min_docs`` counts distinct documents and misses those).
-
-Algorithm (all O(log m) rounds, m = max document token length;
-never an all-pairs step, no driver data path beyond one scalar
-max-length collect — the connected_components_star discipline):
-
-1. Positions: (doc, pos, token) — suffixes are keyed (doc, pos), so
-   no cross-document sentinel is needed; a suffix simply ends at its
-   document's end (missing partner rank = -1, which sorts before
-   every real rank: the standard "$ is smallest" convention).
-2. Prefix doubling: rank_0 = global dense rank of the token; round j
-   joins the rank frame to itself shifted by 2^j and re-ranks the
-   pair (rank, partner-or--1). After ceil(log2 m) rounds equal ranks
-   = identical full suffixes. Global dense rank without a
-   single-partition window: range-partition, per-partition
-   dense_rank numbered pid * 2^40 + local_rank (order-preserving,
-   gap-free not needed).
-3. Adjacent suffix pairs straight off the (final_rank, doc, pos)
-   order: range-partition + in-partition lag, with the ≤ #partitions
-   cross-boundary pairs patched from a tiny per-partition first/last
-   aggregate (``_adjacent_pairs`` — no contiguous rank, no
-   self-join).
-4. Adjacent LCP by binary descent over the SAVED level frames
-   (rank_j at the advanced positions, two hash joins per level):
-   lcp += 2^j whenever both sides exist and agree. Identical-suffix
-   overshoot is clipped by the suffix lengths.
-5. Per-suffix longest repeated prefix h = max(LCP with the two SA
-   neighbours); every h ≥ min_len contributes the cover interval
-   [pos, pos+h-1]; a per-document interval-union (gaps-and-islands
-   on the running max end) yields maximal spans.
-
-Scale: each round shuffles the position stream twice (self-join +
-range rank) and localCheckpoints one level frame, so a 100 TB corpus
-pays ~log2(m) scans of the (doc, pos, rank) stream — tokens
-themselves travel only in round 0. The LCP descent joins the
-adjacent-pair frame (|positions| rows) against each saved level.
-Memory holds J ≈ log2(m) checkpointed rank frames; for typical web
-documents (m ≤ 4096) that is ≤ 12.
-
-r13: for the THRESHOLD output this module actually exports (spans
-covered by repeats of length ≥ min_len — h values are never
-surfaced), the cover identity (step 5's oracle identity) admits a
-far cheaper plan: mark positions whose min_len-gram occurs ≥ 2
-times, merge islands. ``strategy="gram"`` (the ``auto`` default for
-small min_len) implements that: one corpus pass, O(n·L) hashing,
-one narrow shuffle — no ranking at all. The suffix-array paths
-remain for large L (gram hashing work grows with L; the SA round
-structure does not).
+ExactSubstr marks every token covered by a substring of length ≥ L
+that occurs at least twice in the corpus — cross-document or twice
+inside ONE document (``curation.repeated_substring_spans`` counts
+distinct documents and misses the latter). Only that covered point
+set is exported, never per-suffix repeat lengths, and it has a
+direct characterization, the cover identity: a position is covered
+by some repeated substring of length ≥ L iff it is covered by some
+repeated L-gram (⊆: a repeated substring's L-windows are repeated;
+⊇: a repeated L-gram IS a repeated substring of length L). So no
+suffix ranking is needed: hash every positional L-gram, keep the
+identities occurring ≥ 2 times, and merge the kept grams into
+maximal per-document islands — ``curation._gram_spans``, the same
+engine the fixed-k and decontamination span operators run on. One
+corpus pass, O(n·L) hashing and O(n)-row shuffles, independent of
+document length; the DuckDB oracle states the same identity in SQL.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _rank_parts(df: DataFrame) -> int:
-    """Range-partition count for the rank/adjacency exchanges —
-    scale-adaptive (guide §2): the cluster's defaultParallelism (=
-    total cores; 32 on the local bench), overridable with
-    ``SPARK_GRAFT_RANK_PARTS`` for deployments where the position
-    stream per core exceeds comfortable task size. A fixed constant
-    tuned for local mode would leave a 100 TB position stream in 32
-    range partitions."""
-    env = os.environ.get("SPARK_GRAFT_RANK_PARTS", "")
-    if env.isdigit() and int(env) > 0:
-        return int(env)
-    return max(1, df.sparkSession.sparkContext.defaultParallelism)
-
-
-#: Per-partition rank stride for the non-contiguous numbering: local
-#: dense ranks stay below 2^40 rows per partition at any realistic
-#: scale, so pid*2^40 + local_rank is collision-free across the
-#: rank partitions (pid < 2^23).
-_PID_STRIDE = 1 << 40
-
-
-def _global_dense_rank(
-    df: DataFrame,
-    cols: list[str],
-    out: str = "rank",
-) -> DataFrame:
-    """Global dense rank of ``cols`` without a single-partition
-    window: range-partition on the key (equal keys co-locate), then
-    dense_rank inside each partition, numbered ``pid * 2^40 +
-    local_rank`` — order-preserving (range partitions are ordered)
-    and equal-consistent (equal keys share a partition), which is all
-    prefix doubling needs — and fully lazy: no collect, no
-    checkpoint, no extra pass. (A contiguous 1-based variant used to
-    exist for the adjacent-suffix self-join; ``_adjacent_pairs``
-    replaced that join, and nothing needs gap-free ranks any more.)"""
-    part = df.repartitionByRange(
-        _rank_parts(df), *[F.col(c) for c in cols]
-    )
-    part = part.withColumn("_pid", F.spark_partition_id())
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in cols])
-    return part.withColumn(
-        out,
-        (
-            F.col("_pid").cast("long") * F.lit(_PID_STRIDE)
-            + F.dense_rank().over(w)
-        ).cast("long"),
-    ).drop("_pid")
-
-
-def _adjacent_pairs(
-    df: DataFrame,
-    order_cols: list[str],
-    carry: list[str],
-    a_names: list[str],
-    b_names: list[str],
-) -> DataFrame:
-    """Every adjacent row pair of ``df`` in the global ``order_cols``
-    order (a = predecessor, b = successor), carrying ``carry``
-    renamed per side. ``order_cols`` must be a strict total order
-    (distinct keys — suffix keys always include (id, pos)).
-
-    This is the shuffle-frugal replacement for "contiguous global
-    rank + self-join on rank-1": range-partition once, pair
-    within-partition neighbours with a lag over the partition-local
-    sort (no new exchange — the sort is the one the rank needed
-    anyway), and patch in the ≤ #partitions cross-partition boundary
-    pairs from a tiny per-partition first/last aggregate (struct
-    min/max over the order key). The old form paid a countDistinct
-    pass, a driver collect, and a 2-sided hash shuffle of the full
-    (m-token-wide on the direct path) row stream; this form pays none
-    of those (guide §2.4: remove shuffles outright).
-
-    The range-partitioned stream is localCheckpointed (r12, guide
-    §3.3/§5): its two consumers (lag pairs + first/last bounds) get
-    per-consumer column pruning pushed below the exchange, so the
-    Exchanges stop canonicalizing equal and ReusedExchange never
-    fires — measured as the WHOLE upstream (scan → tokenize → rank →
-    suffix slices) executing once per consumer. Materializing it once
-    costs one write of exactly the bytes the exchange already
-    shuffles and removes a full upstream recomputation."""
-    ocols = [F.col(c) for c in order_cols]
-    part = (
-        df.repartitionByRange(_rank_parts(df), *ocols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("_pid").orderBy(*ocols)
-    st = F.struct(*[F.col(c) for c in carry])
-    within = part.withColumn("_prev", F.lag(st).over(w)).where(
-        F.col("_prev").isNotNull()
-    )
-    inner = within.select(
-        *[
-            F.col(f"_prev.{c}").alias(a)
-            for c, a in zip(carry, a_names)
-        ],
-        *[F.col(c).alias(b) for c, b in zip(carry, b_names)],
-    )
-    # Boundary pairs: last row of each partition with the first row
-    # of the NEXT non-empty partition (skipping empty ones). Leading
-    # struct fields are the order key, so min/max pick the true
-    # first/last rows. ``bounds`` is ≤ #partitions rows, so the
-    # successor lookup is a bounded non-equi self-join (min_by over
-    # _rp > _lp) — NOT a single-partition window, which would put a
-    # SinglePartition exchange in a plan whose discipline forbids
-    # corpus-scale funnels, and not a pid+1 equi-join, which would
-    # silently drop a pair across an empty partition.
-    bnd = list(order_cols) + [c for c in carry if c not in order_cols]
-    bst = F.struct(*[F.col(c) for c in bnd])
-    bounds = part.groupBy("_pid").agg(
-        F.min(bst).alias("_f"), F.max(bst).alias("_l")
-    )
-    boundary = (
-        bounds.select(F.col("_pid").alias("_lp"), "_l")
-        .join(
-            bounds.select(F.col("_pid").alias("_rp"), "_f"),
-            F.col("_rp") > F.col("_lp"),
-        )
-        .groupBy("_lp")
-        .agg(
-            F.max("_l").alias("_pl"),
-            F.min_by("_f", "_rp").alias("_nf"),
-        )
-        .select(
-            *[
-                F.col(f"_pl.{c}").alias(a)
-                for c, a in zip(carry, a_names)
-            ],
-            *[
-                F.col(f"_nf.{c}").alias(b)
-                for c, b in zip(carry, b_names)
-            ],
-        )
-    )
-    return inner.unionByName(boundary)
-
-
-def _token_positions(
-    df: DataFrame, text_col: str, id_col: str
-) -> tuple[DataFrame, int]:
-    """((id, pos, tok) stream, corpus max doc token length). One
-    scalar collect for the loop bound."""
-    from pos_api_pipeline_spark.llm.text import spread_small_scan
-
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-    # r13: tokenize+posexplode is scan-stage work — spread low-split
-    # inputs (no-op at scale; see text.spread_small_scan).
-    toked = spread_small_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select("id", toks.alias("_toks"))
-    positions = toked.select(
-        "id", F.posexplode("_toks").alias("pos", "tok")
-    )
-    max_len = toked.agg(F.max(F.size("_toks"))).collect()[0][0] or 0
-    return positions, max_len
-
-
-def suffix_rank_levels(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[list[DataFrame], DataFrame, int]:
-    """Prefix-doubling rank levels. Returns (levels, lens, max_len):
-    ``levels[j]`` is (id, pos, rank) where equal rank ⟺ the suffixes'
-    min(2^j, len)-prefixes are identical strings (and, below 2^j,
-    identical lengths); ``lens`` is (id, len). Each level is
-    localCheckpointed — it feeds both the next round and the LCP
-    descent, and the lineage would otherwise double per round."""
-    positions, max_len = _token_positions(df, text_col, id_col)
-    levels = _levels_from_positions(positions, max_len)
-    lens = _lens_from_level0(levels)
-    return levels, lens, max_len
-
-
-def _lens_from_level0(levels: list[DataFrame]) -> DataFrame:
-    """(id, len) from the checkpointed round-0 rank frame — same
-    (id, pos) rows as the position stream, so identical lengths, but
-    read from the checkpoint instead of re-scanning and re-tokenizing
-    the corpus (r12, guide §2.4: don't recompute what is already
-    materialized)."""
-    return levels[0].groupBy("id").agg(
-        (F.max("pos") + 1).cast("long").alias("len")
-    )
-
-
-def _levels_from_positions(
-    positions: DataFrame, max_len: int
-) -> list[DataFrame]:
-    level = _global_dense_rank(
-        positions, ["tok"]
-    ).select("id", "pos", "rank")
-    levels = [level.localCheckpoint()]
-    step = 1
-    while step < max_len:
-        cur = levels[-1]
-        partner = cur.select(
-            "id", (F.col("pos") - step).alias("pos"),
-            F.col("rank").alias("rank2"),
-        )
-        paired = (
-            cur.join(partner, ["id", "pos"], "left")
-            .withColumn("rank2", F.coalesce("rank2", F.lit(-1).cast("long")))
-        )
-        nxt = _global_dense_rank(
-            paired, ["rank", "rank2"], out="nrank"
-        )
-        levels.append(
-            nxt.select("id", "pos", F.col("nrank").alias("rank"))
-            .localCheckpoint()
-        )
-        step *= 2
-    return levels
+from pos_api_pipeline_spark.llm.curation import (
+    _gram_spans,
+    excise_token_spans,
+)
 
 
 def repeated_spans_exact(
@@ -285,288 +36,32 @@ def repeated_spans_exact(
     min_len: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
-    direct_max_len: int = 512,
-    gram_max_len: int = 64,
 ) -> DataFrame:
     """Exact variable-length repeated-substring spans: maximal
     per-document token spans covered by a substring of ≥ ``min_len``
     tokens that occurs at least twice in the corpus (any mix of
     cross- and within-document). Output: (id_col, span_start,
-    span_end, n_tokens), positions 0-based inclusive.
+    span_end, n_tokens), positions 0-based inclusive; the id column
+    keeps the input's type.
 
-    The cover identity that makes this oracle-able in plain SQL: a
-    position is covered by some repeated substring of length ≥ L iff
-    it is covered by some repeated L-gram (⊆: a repeated substring's
-    L-windows are repeated; ⊇: a repeated L-gram IS a repeated
-    substring of length L). The suffix-array path computes the same
-    point set from per-suffix longest-repeated-prefix lengths.
+    Computed through the cover identity (module docstring): the kept
+    gram identities are the ``min_len``-grams counted ≥ 2 over all
+    occurrences."""
 
-    ``strategy``: ``"gram"`` = the cover identity applied DIRECTLY
-    (r13): a position is covered iff some repeated ``min_len``-gram
-    covers it, so the point set is one gram explode + one count-≥-2
-    sieve — no suffix ranking at all. O(n·L) hashing work and ONE
-    narrow (id, pos, hash) shuffle, independent of document length m;
-    the 100 TB shape while L stays small. ``"double"`` = prefix
-    doubling, O(log m) rounds of O(1)-width rows; ``"direct"`` = one
-    global sort of the per-suffix token-rank slices, rows O(m) wide
-    but a single ranking round. The suffix-array paths compute
-    per-suffix longest-repeated-prefix VALUES and stay the right
-    tool when L is large (gram hashing work grows linearly in L
-    while the SA rounds don't) or when callers need the h surface
-    itself. ``"auto"`` picks gram iff ``min_len ≤ gram_max_len``,
-    else direct iff the measured max document length ≤
-    ``direct_max_len``, else double. All paths produce identical
-    output (equality-tested; the oracle itself verifies the SA
-    output through the gram formulation)."""
-    if strategy not in ("auto", "direct", "double", "gram"):
-        raise ValueError(
-            f"strategy must be auto/direct/double/gram, got {strategy!r}"
+    def repeated(grams: DataFrame) -> DataFrame:
+        return (
+            grams.groupBy("h1", "h2")
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .filter(F.col("_c") >= 2)
+            .select("h1", "h2")
         )
-    if strategy == "gram" or (strategy == "auto" and min_len <= gram_max_len):
-        # No max-length collect, no rank rounds: the gram sieve needs
-        # neither the loop bound nor the position ranks.
-        return _gram_cover_spans(df, min_len, text_col, id_col)
-    positions, max_len = _token_positions(df, text_col, id_col)
-    if max_len == 0 or min_len > max_len:
-        # Inherit the input's id type (string doc ids must stay
-        # string): a hardcoded long here would break downstream
-        # unions/joins such as remove_repeated_spans' excision.
-        return df.limit(0).select(
-            F.col(id_col),
-            F.lit(None).cast("long").alias("span_start"),
-            F.lit(None).cast("long").alias("span_end"),
-            F.lit(None).cast("long").alias("n_tokens"),
-        )
-    if strategy == "direct" or (
-        strategy == "auto" and max_len <= direct_max_len
-    ):
-        h = _h_direct(positions, max_len)
-    else:
-        h = _h_double(positions, max_len)
-    return _cover_to_spans(h.filter(F.col("h") >= min_len), id_col)
 
-
-def _gram_cover_spans(
-    df: DataFrame, min_len: int, text_col: str, id_col: str
-) -> DataFrame:
-    """Repeated-substring cover via the repeated-L-gram identity
-    (r13, guide §1.1 first-principles / §1.2 "the distributed
-    algorithm"): a position is covered by a repeated substring of
-    length ≥ L iff it is covered by a repeated L-gram (⊆: a repeated
-    substring's L-windows are repeated; ⊇: a repeated L-gram IS a
-    repeated substring of length L) — the same identity the DuckDB
-    oracle uses to verify the suffix-array output, and the merged
-    spans depend only on the covered POINT SET, so all strategies
-    are bit-identical.
-
-    Shape: per-position L-gram → 128-bit gram identity (two
-    independent xxhash64 streams — a false merge needs a
-    simultaneous 2⁻¹²⁸-scale collision in both; the detector family
-    already rests on hashed gram identity) → count ≥ 2 sieve →
-    per-doc interval union. The gram stream is localCheckpointed
-    once (lazy — materialized inside the main action): its two
-    consumers (the count aggregate and the sieve join's stream side)
-    carry the lambda-bearing tokenize tree, which never
-    canonicalizes, so without the cut the corpus would be scanned
-    and re-hashed per consumer. One corpus pass, one narrow
-    (id, pos, h1, h2) exchange pair (groupBy + AQE-skew-handled
-    sieve join — a window over the gram partition would put every
-    occurrence of one boilerplate gram in a single task), one
-    per-doc islands window. Work is O(n·L) hashing + O(n)-row
-    shuffles, independent of document length m."""
-    from pos_api_pipeline_spark.llm.text import spread_small_scan
-
-    L = min_len
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-    # r13: gram hashing is scan-stage work — spread low-split inputs
-    # (no-op at scale; see text.spread_small_scan).
-    toked = spread_small_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select("id", toks.alias("_toks"))
-    # sequence(1, 0) runs BACKWARDS — guard short docs to an empty
-    # gram array (same discipline as the shingle builders).
-    gram_strs = F.when(
-        F.size("_toks") >= L,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_toks") - F.lit(L - 1)),
-            lambda i: F.array_join(F.slice("_toks", i, L), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = (
-        toked.select("id", F.posexplode(gram_strs).alias("pos", "_g"))
-        .select(
-            "id",
-            F.col("pos").cast("long").alias("pos"),
-            F.xxhash64("_g").alias("h1"),
-            F.xxhash64(F.lit(7), "_g").alias("h2"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    rep = (
-        grams.groupBy("h1", "h2")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= 2)
-        .select("h1", "h2")
-    )
-    covered = grams.join(rep, ["h1", "h2"], "left_semi").select(
-        "id", "pos", F.lit(L).cast("long").alias("h")
-    )
-    return _cover_to_spans(covered, id_col)
-
-
-def _h_direct(positions: DataFrame, max_len: int) -> DataFrame:
-    """(id, pos, h) per-suffix longest-repeated-prefix via ONE global
-    rank of the suffix slices: tokens → int ranks (lazy, halves the
-    slice bytes), doc-level rank arrays, per-position suffix slice,
-    adjacent-in-suffix-order pairing via ``_adjacent_pairs`` (one
-    range exchange, no contiguous rank, no self-join), adjacent LCP
-    by direct array comparison (zip_with)."""
-    r0 = _global_dense_rank(positions, ["tok"])
-    arr = r0.groupBy("id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "rank"))),
-            lambda s: s["rank"],
-        ).alias("ranks")
-    )
-    sufs = arr.select(
-        "id", F.posexplode("ranks").alias("pos", "_r"), "ranks"
-    ).select(
-        "id",
-        F.col("pos").cast("long").alias("pos"),
-        F.slice(F.col("ranks"), F.col("pos") + 1, max_len).alias("suf"),
-    )
-    adj = _adjacent_pairs(
-        sufs,
-        ["suf", "id", "pos"],
-        ["suf", "id", "pos"],
-        ["suf_a", "id_a", "pa"],
-        ["suf_b", "id_b", "pb"],
-    )
-    eq = F.zip_with("suf_a", "suf_b", lambda x, y: x.eqNullSafe(y))
-    ff = F.array_position(eq, F.lit(False))
-    lcp = (
-        F.when(ff == 0, F.least(F.size("suf_a"), F.size("suf_b")))
-        .otherwise(ff - 1)
-        .cast("long")
-    )
-    pairs = adj.select("id_a", "pa", "id_b", "pb", lcp.alias("l"))
-    return _pair_lcp_to_h(pairs)
-
-
-def _h_double(positions: DataFrame, max_len: int) -> DataFrame:
-    """(id, pos, h) via prefix-doubling levels + binary LCP descent
-    (see module docstring)."""
-    levels = _levels_from_positions(positions, max_len)
-    lens = _lens_from_level0(levels)
-    final = levels[-1].join(lens, "id")
-    adj = _adjacent_pairs(
-        final,
-        ["rank", "id", "pos"],
-        ["id", "pos", "len"],
-        ["id_a", "pa", "len_a"],
-        ["id_b", "pb", "len_b"],
-    )
-    cur = adj.select(
-        "id_a", "pa", "len_a", "id_b", "pb", "len_b",
-        F.col("pa").alias("acur"), F.col("pb").alias("bcur"),
-        F.lit(0).cast("long").alias("lcp"),
-    )
-    # Binary LCP descent over the saved levels, high to low. Two hash
-    # joins per level on (id, advanced position); a position past its
-    # document end finds no rank row → null → no advance.
-    for j in range(len(levels) - 1, -1, -1):
-        step = 1 << j
-        ra = levels[j].select(
-            F.col("id").alias("id_a"), F.col("pos").alias("acur"),
-            F.col("rank").alias("_ra"),
-        )
-        rb = levels[j].select(
-            F.col("id").alias("id_b"), F.col("pos").alias("bcur"),
-            F.col("rank").alias("_rb"),
-        )
-        cur = (
-            cur.join(ra, ["id_a", "acur"], "left")
-            .join(rb, ["id_b", "bcur"], "left")
-        )
-        adv = F.col("_ra").isNotNull() & (F.col("_ra") == F.col("_rb"))
-        bump = F.when(adv, F.lit(step)).otherwise(F.lit(0)).cast("long")
-        cur = (
-            cur.withColumn("lcp", F.col("lcp") + bump)
-            .withColumn("acur", F.col("acur") + bump)
-            .withColumn("bcur", F.col("bcur") + bump)
-            .drop("_ra", "_rb")
-        )
-    # identical suffixes overshoot past their ends; clip to length
-    lcp = F.least(
-        F.col("lcp"), F.col("len_a") - F.col("pa"),
-        F.col("len_b") - F.col("pb"),
-    )
-    pairs = cur.select("id_a", "pa", "id_b", "pb", lcp.alias("l"))
-    return _pair_lcp_to_h(pairs)
-
-
-def _pair_lcp_to_h(pairs: DataFrame) -> DataFrame:
-    """Per-suffix longest repeated prefix from adjacent-pair LCPs:
-    each suffix's h = max over its (≤2) SA neighbours.
-
-    ``pairs`` is localCheckpointed first (r12, guide §3.3): the
-    two-sided union prunes different columns per side
-    ((id_a, pa, l) vs (id_b, pb, l)), which specializes each side's
-    copy of the whole upstream plan — scan, ranking, adjacency, and
-    on the double path the 2·log(m) LCP-descent joins — so nothing
-    canonicalizes and everything runs twice. The pair frame is five
-    numeric columns plus ids; materializing it is far cheaper than
-    one spare corpus pass."""
-    pairs = pairs.localCheckpoint()
-    return (
-        pairs.select(F.col("id_a").alias("id"), F.col("pa").alias("pos"), "l")
-        .unionAll(
-            pairs.select(
-                F.col("id_b").alias("id"), F.col("pb").alias("pos"), "l"
-            )
-        )
-        .groupBy("id", "pos")
-        .agg(F.max("l").alias("h"))
-    )
-
-
-def _cover_to_spans(h: DataFrame, id_col: str) -> DataFrame:
-    # interval union per document: [pos, pos+h-1], merged while the
-    # next start is ≤ running-max-end + 1 (token-adjacent cover)
-    cover = h.select(
-        "id", F.col("pos").alias("s"), (F.col("pos") + F.col("h") - 1).alias("e")
-    )
-    w = Window.partitionBy("id").orderBy("s")
-    run_e = F.max("e").over(
-        Window.partitionBy("id").orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    isl = (
-        cover.withColumn(
-            "_ni",
-            F.when(
-                F.col("s") > F.coalesce(run_e, F.lit(-1)) + 1, F.lit(1)
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn("island", F.sum("_ni").over(w))
-    )
-    return (
-        isl.groupBy("id", "island")
-        .agg(
-            F.min("s").cast("long").alias("span_start"),
-            F.max("e").cast("long").alias("span_end"),
-        )
-        .select(
-            F.col("id").alias(id_col),
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start") + 1)
-            .cast("long")
-            .alias("n_tokens"),
-        )
+    spans = _gram_spans(df, min_len, text_col, id_col, repeated)
+    return spans.select(
+        id_col,
+        "span_start",
+        "span_end",
+        (F.col("span_end") - F.col("span_start") + 1).alias("n_tokens"),
     )
 
 
@@ -575,7 +70,6 @@ def remove_repeated_spans(
     min_len: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Apply ExactSubstr dedup (Lee et al. 2022): rebuild every
     document with all ``repeated_spans_exact`` ranges excised — the
@@ -589,10 +83,7 @@ def remove_repeated_spans(
 
     Output: (id_col, cleaned, n_tokens, n_tokens_removed).
     """
-    from pos_api_pipeline_spark.llm.curation import excise_token_spans
-
     spans = repeated_spans_exact(
-        df, min_len=min_len, text_col=text_col, id_col=id_col,
-        strategy=strategy,
+        df, min_len=min_len, text_col=text_col, id_col=id_col
     )
     return excise_token_spans(df, spans, text_col, id_col)

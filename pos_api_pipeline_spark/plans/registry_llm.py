@@ -642,14 +642,11 @@ def q_sa_repeated_spans_exact(spark, sf_dir):
     """Exact substring dedup spans (llm/suffix.py — Lee et al. 2022's
     ExactSubstr semantics): maximal per-document spans covered by any
     ≥8-token substring occurring ≥2 times corpus-wide,
-    within-document repeats included. Both engines lean on the cover
+    within-document repeats included. Both engines apply the cover
     identity (repeated-substring-≥L cover == repeated-L-gram cover,
-    counting ALL occurrences): since r13 the Spark side's ``auto``
-    strategy applies it directly (gram-cover sieve — one corpus
-    pass, no ranking rounds) exactly as the DuckDB oracle always
-    has; the distributed suffix-array paths (prefix doubling /
-    direct rank) remain selectable and equality-tested for the
-    large-min_len regime."""
+    counting ALL occurrences): the Spark side runs the shared
+    gram-span sieve (one corpus pass, no ranking rounds), the DuckDB
+    oracle the same identity in SQL."""
     from pos_api_pipeline_spark.llm.suffix import repeated_spans_exact
 
     docs = _t(spark, sf_dir, "documents")
@@ -702,8 +699,8 @@ def q_sa_deduped_docs(spark, sf_dir):
     — the deduplicate-text-datasets policy of excising every
     occurrence of any ≥8-token substring repeated corpus-wide):
     cleaned text hash-matched token-for-token, via the same
-    repeated-L-gram cover identity as sa_repeated_spans_exact (and,
-    since r13, the same gram-cover execution on the auto path)."""
+    repeated-L-gram cover identity and gram-span sieve as
+    sa_repeated_spans_exact."""
     from pos_api_pipeline_spark.llm.suffix import remove_repeated_spans
 
     docs = _t(spark, sf_dir, "documents")

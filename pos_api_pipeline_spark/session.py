@@ -30,11 +30,19 @@ def get_spark(
       additionally carry explicit ``F.broadcast`` hints in operators.
     - ``session.timeZone=UTC`` keeps timestamp semantics deterministic
       across engines and clusters.
+    - Without ``master``, the session runs ``local[N]`` with N the
+      cores this process may use (``SPARK_GRAFT_CPUS`` overrides), and
+      shuffle partitions default to the same N: more task threads
+      than cores only time-slice them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+        )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -51,7 +59,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         # local mode = driver-only: the driver heap IS the executor
-        # memory; size it for 32 task threads' shuffle state.
+        # memory; size it for every task thread's shuffle state.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # Broadcast creation serializes task results through the
         # driver; the 1g default trips on legitimately-sized (tens of

@@ -299,24 +299,64 @@ def test_repeated_substring_spans_merges_adjacent_islands(spark):
     assert spans == {(0, 3), (9, 12)}
 
 
-def test_repeated_substring_strategies_agree(spark):
-    """The window (single-scan) and join (AQE-skew-splittable) DF
-    strategies must be output-identical."""
+def _brute_substring_spans(texts, k: int, min_docs: int):
+    """Direct definition of repeated_substring_spans: a k-gram is kept
+    iff it occurs in ≥ min_docs DISTINCT documents; kept positions
+    merge into one span while the next starts ≤ k tokens later."""
+    toks = {
+        d: [w for w in (t or "").lower().split() if w]
+        for d, t in enumerate(texts)
+    }
+    docs_of: dict[tuple, set[int]] = {}
+    for d, ts in toks.items():
+        for i in range(len(ts) - k + 1):
+            docs_of.setdefault(tuple(ts[i:i + k]), set()).add(d)
+    out = []
+    for d, ts in toks.items():
+        pos = [
+            i for i in range(len(ts) - k + 1)
+            if len(docs_of[tuple(ts[i:i + k])]) >= min_docs
+        ]
+        runs: list[list[int]] = []
+        for p in pos:
+            if runs and p - runs[-1][-1] <= k:
+                runs[-1].append(p)
+            else:
+                runs.append([p])
+        for r in runs:
+            s, e = r[0], r[-1] + k - 1
+            out.append((d, s, e, len(r), " ".join(ts[s:e + 1])))
+    return sorted(out)
+
+
+def test_repeated_substring_spans_matches_brute_force(spark):
+    """Distinct-document predicate vs the Python reference on a
+    tiny-vocab random corpus (dense repeats), for min_docs 2 and 3.
+    Doc 0 repeats a gram only inside itself — that must count once,
+    so it is never flagged on its own — and null / empty texts must
+    yield no spans."""
+    import random
+
     from pos_api_pipeline_spark.llm.curation import repeated_substring_spans
 
-    shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (0, shared + " unique tail zero zero0 zero1 zero2 zero3"),
-        (1, shared + " other ending one one1 one2 one3 one4"),
-        (2, "completely different words with no overlap at all here"),
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(5)]
+    own = "solo1 solo2 solo3 solo4"
+    texts = [f"{own} mid {own}", None, ""] + [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 25)))
+        for _ in range(27)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        repeated_substring_spans(df, k=4, strategy="window").collect()
-    )
-    b = sorted(repeated_substring_spans(df, k=4, strategy="join").collect())
-    assert a == b and len(a) == 2  # docs 0 and 1 share one span each
-
+    df = _docs(spark, texts)
+    for k, min_docs in ((4, 2), (4, 3), (3, 3)):
+        got = sorted(
+            (r.doc_id, r.span_start, r.span_end, r.n_grams, r.span_tokens)
+            for r in repeated_substring_spans(
+                df, k=k, min_docs=min_docs
+            ).collect()
+        )
+        want = _brute_substring_spans(texts, k, min_docs)
+        assert got and got == want, (k, min_docs)
+        assert all(d not in (0, 1, 2) for d, *_ in got)
 
 def test_contaminated_spans_surgical_ranges(spark):
     """Span-grain decontamination finds exactly the benchmark-overlap
@@ -383,13 +423,3 @@ def test_remove_contaminated_spans_null_text_normalized(spark):
            remove_contaminated_spans(docs, bench, k=4).collect()}
     assert out[1].cleaned == ""
     assert out[1].n_tokens == 0 and out[1].n_tokens_removed == 0
-
-
-def test_repeated_substring_spans_rejects_bad_strategy(spark):
-    import pytest as _pytest
-
-    from pos_api_pipeline_spark.llm.curation import repeated_substring_spans
-
-    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="strategy"):
-        repeated_substring_spans(df, k=2, strategy="windows")

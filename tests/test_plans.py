@@ -193,6 +193,44 @@ def test_unigram_logprob_single_corpus_pass(spark):
     assert plan.count("Scan parquet") == 0, plan.count("Scan parquet")
 
 
+# The gram-span family on its one engine (curation._gram_spans):
+# query -> (gram streams, exchange ceiling). Each gram stream is
+# checkpointed, so its documents scan happens inside the checkpoint
+# and the printed plan may show at most one more scan per stream
+# (the span-text or excision re-attach).
+GRAM_SPAN_QUERIES = {
+    "sa_repeated_spans_exact": (1, 2),
+    "sa_deduped_docs": (1, 2),
+    "repeated_substring_spans": (1, 3),
+    "benchmark_contaminated_spans": (2, 2),
+    "span_decontaminated_docs": (2, 3),
+}
+
+
+def test_gram_span_family_single_sieve(spark):
+    """Lock the unified gram-span shape on all five span queries:
+    documents scanned at most once per gram stream, the gram-identity
+    predicate applied as ONE LeftSemi join on (h1, h2) — never a
+    sort-merge join on the gram identity, which would re-sort the
+    whole gram stream — and no SinglePartition exchange funnelling
+    the corpus through one task."""
+    for name, (streams, max_exch) in GRAM_SPAN_QUERIES.items():
+        plan = plan_of(spark, name)
+        assert plan.count("Scan parquet") <= streams, (
+            name, plan.count("Scan parquet"),
+        )
+        semis = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
+        assert len(semis) == 1, (name, semis)
+        assert "BroadcastHashJoin [h1#" in semis[0], (name, semis[0])
+        assert not [
+            ln for ln in plan.splitlines()
+            if "SortMergeJoin" in ln and "h1#" in ln
+        ], name
+        assert "SinglePartition" not in plan, name
+        n_shuffles = len(re.findall(r"\bExchange\b", plan))
+        assert n_shuffles <= max_exch, (name, n_shuffles)
+
+
 # Queries whose algorithm intentionally scores a broadcast candidate
 # set against every row (brute-force baseline / tiny broadcast side) —
 # the ONLY places a nested-loop/cartesian strategy is acceptable.
@@ -201,12 +239,6 @@ CROSS_JOIN_OK = {
     # one-row Bloom-filter scalar carry (dense word array) probed
     # map-side before the exact verify
     "contamination_bloom_check",
-    # suffix-array adjacency: the ≤ 32-row per-partition
-    # first/last bounds frame finds each partition's next non-empty
-    # successor with a bounded non-equi self-join (suffix.py
-    # _adjacent_pairs) — O(_RANK_PARTS²) rows, never corpus-scale
-    "sa_repeated_spans_exact",
-    "sa_deduped_docs",
     "lsh_ann_topk",
     "ivf_ann_topk",
     # IVF/SemDeDup centroid assignment scores the corpus against a

@@ -246,10 +246,10 @@ def test_semantic_dedup_auto_centroids(spark):
 
 
 def test_repeated_substring_hot_gram_window_completes(spark):
-    """The window-DF strategy buffers each gram-hash partition; a
-    boilerplate 8-gram shared by thousands of docs must stay LINEAR
-    (one window row per occurrence, never a pair blowup) and agree
-    with the join strategy on the flagged spans."""
+    """A boilerplate 8-gram shared by thousands of docs must stay
+    LINEAR through the gram sieve: its distinct-document count
+    combines map-side and its occurrences stream through the
+    semi-join (one row per occurrence, never a pair blowup)."""
     import time
 
     from pos_api_pipeline_spark.llm.curation import repeated_substring_spans
@@ -264,14 +264,11 @@ def test_repeated_substring_hot_gram_window_completes(spark):
         ).alias("text"),
     )
     t0 = time.perf_counter()
-    w = repeated_substring_spans(docs, k=8, strategy="window")
-    n_window = w.count()
+    n = repeated_substring_spans(docs, k=8).count()
     elapsed = time.perf_counter() - t0
     # one span per doc (the shared boilerplate prefix), not O(n^2)
-    assert n_window == 3000
+    assert n == 3000
     assert elapsed < 60
-    n_join = repeated_substring_spans(docs, k=8, strategy="join").count()
-    assert n_join == n_window
 
 
 # ---------------------------------------------------------------------------

@@ -1,20 +1,16 @@
-"""repeated_spans_exact (llm/suffix.py): distributed suffix-array
-prefix doubling vs an independent brute-force reference, plus the
-semantics the fixed-k gram form cannot express (within-document
-repeats) and the plan discipline (no single-partition windows)."""
+"""repeated_spans_exact (llm/suffix.py): the gram-cover engine vs an
+independent brute-force reference that enumerates every substring,
+plus the semantics the fixed-k distinct-document form cannot express
+(within-document repeats) and the plan discipline (no
+single-partition windows)."""
 
 from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
-from pos_api_pipeline_spark.llm.suffix import (
-    _global_dense_rank,
-    repeated_spans_exact,
-    suffix_rank_levels,
-)
+from pos_api_pipeline_spark.llm.suffix import repeated_spans_exact
 
 
 def _brute_spans(docs: dict[int, list[str]], min_len: int):
@@ -99,7 +95,7 @@ def test_identical_documents_whole_span(spark):
 
 def test_variable_length_span_is_maximal(spark):
     # a 20-token shared block must come back as ONE 20-token span,
-    # not fixed-k fragments — the property the gram form approximates
+    # not fixed-k fragments — overlapping repeated grams fuse
     block = [f"b{i}" for i in range(20)]
     docs = {
         0: ["u0"] + block + ["u1"],
@@ -114,52 +110,9 @@ def test_empty_and_short_docs(spark):
     assert _spark_spans(spark, docs, 2) == []
 
 
-def test_adjacent_pairs_match_total_order(spark):
-    # the self-join-free adjacency: every consecutive pair of the
-    # global (k, id, pos) order must appear exactly once, INCLUDING
-    # the ≤ _RANK_PARTS cross-partition boundary pairs (500 rows over
-    # 32 range partitions ⇒ ~31 boundary pairs exercised)
-    from pos_api_pipeline_spark.llm.suffix import _adjacent_pairs
-
-    rng = random.Random(7)
-    rows = [(rng.randrange(100), i // 7, i % 7) for i in range(500)]
-    df = spark.createDataFrame(rows, "k long, id long, pos long")
-    got = {
-        (r.ka, r.ia, r.pa, r.kb, r.ib, r.pb)
-        for r in _adjacent_pairs(
-            df,
-            ["k", "id", "pos"],
-            ["k", "id", "pos"],
-            ["ka", "ia", "pa"],
-            ["kb", "ib", "pb"],
-        ).collect()
-    }
-    ordered = sorted(rows)
-    want = {
-        (*ordered[i], *ordered[i + 1]) for i in range(len(ordered) - 1)
-    }
-    assert got == want
-
-
-def test_levels_converge_to_full_suffix_classes(spark):
-    df = spark.createDataFrame(
-        [(0, "x y z x y"), (1, "x y")], "doc_id long, text string"
-    )
-    levels, lens, max_len = suffix_rank_levels(df)
-    assert max_len == 5
-    final = {(r.id, r.pos): r.rank for r in levels[-1].collect()}
-    # suffix "x y" appears at (0,3) and (1,0): identical → equal rank
-    assert final[(0, 3)] == final[(1, 0)]
-    # suffix "y" at (0,4) and (1,1): identical → equal rank
-    assert final[(0, 4)] == final[(1, 1)]
-    # distinct suffixes get distinct ranks
-    vals = list(final.values())
-    assert len(set(vals)) == len(vals) - 2
-
-
 def test_no_single_partition_window(spark):
-    # the scale discipline: ranking must never funnel the corpus
-    # through one task — assert no empty-partitionBy Window exchange
+    # the scale discipline: the island merge must never funnel the
+    # corpus through one task — assert no empty-partitionBy Window
     df = spark.createDataFrame(
         [(d, "a b c d e f g h i j") for d in range(4)],
         "doc_id long, text string",
@@ -173,67 +126,10 @@ def test_no_single_partition_window(spark):
     assert "SinglePartition" not in plan
 
 
-def test_lazy_rank_mode_order_preserving(spark):
-    df = spark.range(1000).select((F.col("id") % 37).alias("k"))
-    ranked = _global_dense_rank(df, ["k"]).collect()
-    by_key = {}
-    for r in ranked:
-        by_key.setdefault(r.k, set()).add(r.rank)
-    # equal keys → one rank; larger key → strictly larger rank
-    assert all(len(v) == 1 for v in by_key.values())
-    ks = sorted(by_key)
-    rs = [next(iter(by_key[k])) for k in ks]
-    assert rs == sorted(rs) and len(set(rs)) == len(rs)
-
-
-def test_both_strategies_agree_and_match_brute(spark):
-    rng = random.Random(99)
-    vocab = [f"v{i}" for i in range(6)]
-    docs = {
-        d: [rng.choice(vocab) for _ in range(rng.randint(0, 35))]
-        for d in range(25)
-    }
-    df = spark.createDataFrame(
-        [(d, " ".join(t)) for d, t in docs.items()], "doc_id long, text string"
-    )
-    want = _brute_spans(docs, 4)
-    for strat in ("gram", "direct", "double"):
-        rows = repeated_spans_exact(df, min_len=4, strategy=strat).collect()
-        got = sorted(
-            (r.doc_id, r.span_start, r.span_end, r.n_tokens) for r in rows
-        )
-        assert got == want, strat
-
-
-def test_auto_threshold_picks_double_for_long_docs(spark):
-    # force auto past BOTH thresholds (gram_max_len below min_len,
-    # direct_max_len below the doc length): the double path must
-    # still be exact
-    block = [f"z{i}" for i in range(10)]
-    docs = {0: block + ["a"] + block, 1: block}
-    df = spark.createDataFrame(
-        [(d, " ".join(t)) for d, t in docs.items()], "doc_id long, text string"
-    )
-    rows = repeated_spans_exact(
-        df, min_len=10, strategy="auto", direct_max_len=4, gram_max_len=9
-    ).collect()
-    got = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.n_tokens) for r in rows
-    )
-    assert got == _brute_spans(docs, 10)
-
-
-def test_rejects_unknown_strategy(spark):
-    df = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        repeated_spans_exact(df, strategy="bogus")
-
-
 def test_hot_identical_corpus_stays_linear(spark):
-    # skew stress: thousands of byte-identical docs → every suffix
-    # has thousands of exact twins. The sort key (suf, id, pos)
-    # splits tie groups across range partitions, so no task inherits
-    # the whole cluster; adjacency stays one pair per rank step.
+    # skew stress: thousands of byte-identical docs → every gram has
+    # thousands of exact twins. The count aggregate combines them
+    # map-side and the sieve streams them, so the work stays linear.
     import time as _time
 
     n = 3000
